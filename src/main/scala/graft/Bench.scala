@@ -106,14 +106,7 @@ object Bench {
     // Recording the size makes that attribution a JSON diff instead of
     // a frozen-tree A/B next time. The scan also serves as the
     // documents-table warm pass.
-    // gated on the batch phase actually running: a streaming-only
-    // iteration run must not pay a full documents+lineitem scan to
-    // stamp a fingerprint whose only consumer is batch-drift
-    // attribution (it emits null instead — visibly absent, never
-    // silently wrong)
-    val corpusFp: String = if (
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").contains("streaming")) "null"
-    else try {
+    val corpusFp: String = try {
       val r = Tables.documents(spark, sfDir).agg(
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)),
@@ -130,24 +123,7 @@ object Bench {
 
     // a failed run records -1, never its time-to-failure — a broken
     // query must not masquerade as a fast one in tracked benchmarks.
-    // SPARK_GRAFT_BENCH_ONLY=streaming skips the batch loop — a local
-    // iteration knob for streaming-engine work; the driver never sets it
-    val skipQueries = sys.env.get("SPARK_GRAFT_BENCH_ONLY").contains("streaming")
-    // SPARK_GRAFT_BENCH_FILTER=prefix1,prefix2 keeps only queries whose
-    // name starts with one of the prefixes — a local-iteration knob
-    // (validating the canary harness, re-measuring one drift family)
-    // so a subset run costs ~a minute, not the full sweep; the driver
-    // never sets it, and a filtered artifact is visibly partial (its
-    // `queries` map is small and `n` rides in the summary line)
-    val nameFilter: String => Boolean =
-      sys.env.get("SPARK_GRAFT_BENCH_FILTER").filter(_.nonEmpty) match {
-        case Some(f) =>
-          val prefixes = f.split(",").map(_.trim).filter(_.nonEmpty)
-          name => prefixes.exists(name.startsWith)
-        case None => _ => true
-      }
-    val qlist = if (skipQueries) Nil
-      else SparkEntry.queries.toSeq.filter(q => nameFilter(q._1)).sortBy(_._1)
+    val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
     // The N runs of each query are BLOCK-interleaved: within each
     // block of BenchBlock queries, runs round-robin across the block,
     // so a query's samples land tens of seconds apart — a transient
@@ -241,7 +217,7 @@ object Bench {
     // one off-clock probe pair so fence 0 is not systematically cold
     // (JIT + shuffle-path warm) — a cold first fence would inflate the
     // reference if it happened to be the minimum's rival
-    if (qlist.nonEmpty) fence()
+    fence()
     val fencesB = Seq.newBuilder[(String, Double, Double)]
     val groupsB = Seq.newBuilder[Seq[String]]
     for (block <- qlist.grouped(BenchBlock)) {
@@ -260,7 +236,7 @@ object Bench {
         times(name) += t
       }
     }
-    if (qlist.nonEmpty) fencesB += fence() // closing fencepost
+    fencesB += fence() // closing fencepost
     val fences = fencesB.result()
     val groups = groupsB.result()
     def probeStat(sel: ((String, Double, Double)) => Double)(
@@ -340,10 +316,6 @@ object Bench {
           .exists(_ != Runtime.getRuntime.availableProcessors()) =>
         (None, s"probe parallelism local[$cpus] != host cores " +
           s"${Runtime.getRuntime.availableProcessors()} the band was calibrated at")
-      case Some(_) if fences.isEmpty =>
-        // distinct from probe FAILURE: zero fences ran at all
-        // (streaming-only run or an empty batch filter)
-        (None, "no batch fences ran (streaming-only or empty filter)")
       case Some(_) if cpuMin < 0 || shufMin < 0 =>
         (None, "a probe class failed every fence")
       case Some(ref) =>
@@ -648,10 +620,10 @@ object Bench {
     * /root/reference/old/gen.py:13-26) through the keyed stateful
     * engine in one replay. The reference's generator targets ~2,000
     * msg/s; this reports how many the engine absorbs per second. */
-  private[graft] val StreamN = 200000
-  private[graft] val WarmupN = 30000
+  private val StreamN = 200000
+  private val WarmupN = 30000
 
-  private[graft] def genTrades(n: Int): Seq[graft.model.Trade] = {
+  private def genTrades(n: Int): Seq[graft.model.Trade] = {
     import graft.model.Trade
     val rnd = new scala.util.Random(42)
     val base = 1723459200000L
@@ -678,7 +650,7 @@ object Bench {
     * the r13 HDFS-provider collapse was bimodal at sample granularity
     * (one lateness sample hit the fast mode inside an otherwise-slow
     * run), which only per-sample observables can show. */
-  private[graft] final case class Replay(rate: Long, secs: Double)
+  private final case class Replay(rate: Long, secs: Double)
 
   /** One streaming engine's full measurement: provider it ran on, how
     * many warmup replays the adaptive warmup needed, the measured
@@ -698,27 +670,6 @@ object Bench {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
     "spark.sql.shuffle.partitions")
 
-  // A/B adjudication knobs — LOCAL-iteration only, the driver never
-  // sets them; they exist so a methodology suspect (the adaptive
-  // warmup, the per-sample collection) can be isolated in one env
-  // flip instead of a code revert:
-  //   SPARK_GRAFT_STREAM_WARMUP=fixed1  one 30k warmup replay (the
-  //                                     r13 methodology)
-  //   SPARK_GRAFT_STREAM_GC=off         skip the off-clock per-sample
-  //                                     System.gc()
-  private def fixedWarmup = sys.env.get("SPARK_GRAFT_STREAM_WARMUP").contains("fixed1")
-  private def gcOff = sys.env.get("SPARK_GRAFT_STREAM_GC").contains("off")
-  private def unloadOff = sys.env.get("SPARK_GRAFT_STREAM_UNLOAD").contains("off")
-
-  /** SPARK_GRAFT_STREAM_ENGINES=v1,lateness runs only those engines —
-    * a single-engine A/B costs ~1 min instead of the full six-engine
-    * sweep. Skipped engines report -1 with empty samples, exactly like
-    * a failed engine, so the JSON shape never changes. Local-iteration
-    * knob; the driver never sets it. */
-  private def engineSubset: Option[Set[String]] =
-    sys.env.get("SPARK_GRAFT_STREAM_ENGINES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
   private val HdfsProvider = "HDFSBackedStateStoreProvider (default)"
   private val RocksProvider = "RocksDBStateStoreProvider+changelog"
 
@@ -733,7 +684,7 @@ object Bench {
     * /dev/shm is tmpfs — no fsync can stall there — so provider cost
     * separates from storage noise; override with
     * SPARK_GRAFT_STREAM_CKPT to measure a specific storage target. */
-  private[graft] lazy val StreamCkptRoot: String = {
+  private lazy val StreamCkptRoot: String = {
     val base = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT",
       if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
         "/dev/shm" else sys.props("java.io.tmpdir"))
@@ -762,7 +713,7 @@ object Bench {
 
   /** Replay `n` generated trades through the engine, checkpointing
     * under [[StreamCkptRoot]] (deleted after the replay). */
-  private[graft] def replayRate(
+  private def replayRate(
       spark: SparkSession,
       n: Int,
       engine: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_],
@@ -789,11 +740,6 @@ object Bench {
     }
   }
 
-  /** Three measured samples, ascending — kept for the standalone
-    * diagnostics (StreamV1V2); the bench itself records measure order. */
-  private[graft] def samples3(measure: => Long): Seq[Long] =
-    Seq(measure, measure, measure).sorted
-
   private val MaxWarmupReplays = 5
 
   /** Measured replays per engine. 5, not 3, since r15: the r15 A/B
@@ -803,13 +749,7 @@ object Bench {
     * judge flagged as its top item was exactly one such draw. Two more
     * ~2.5s samples per engine (~25s per run) buy a materially tighter
     * median; the samples_rate arrays keep the raw draws auditable. */
-  private val StreamSamples =
-    // toIntOption: a typo in this local-iteration knob must not kill
-    // the whole bench (batch phase included) with an opaque
-    // ExceptionInInitializerError — degrade to the default like the
-    // other knobs do
-    math.max(1, sys.env.get("SPARK_GRAFT_STREAM_SAMPLES")
-      .flatMap(_.trim.toIntOption).getOrElse(5))
+  private val StreamSamples = 5
 
   /** Adaptive warmup: replay WarmupN-event batches until two
     * CONSECUTIVE warmup rates agree within 20% (min 2, cap
@@ -847,16 +787,10 @@ object Bench {
   // maintenance read-modify-write per store op — both are the
   // documented production settings for high-throughput stateful
   // queries on the RocksDB provider.
-  // SPARK_GRAFT_STREAM_CHANGELOG=off flips changelog checkpointing to
-  // full-snapshot commits — an A/B isolation knob (the composed-band
-  // study's untested axis); local-iteration only, the driver never
-  // sets it, and the resolved conf rides in streaming_detail either way
   private val RocksConfs = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      (if (sys.env.get("SPARK_GRAFT_STREAM_CHANGELOG").contains("off")) "false"
-       else "true"),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
 
   /** All six streaming engine measurements, in one place so every
@@ -897,15 +831,11 @@ object Bench {
     // hash-matches this exact fold against the direct 5-min oracle)
     def cascadeEngine(df: org.apache.spark.sql.DataFrame) =
       StreamingOhlcv.cascadeBars(df, "1 minute", "5 minutes")
-    val v2Confs = RocksConfs ++
-      sys.env.get("SPARK_GRAFT_V2_PARTS").map("spark.sql.shuffle.partitions" -> _)
     val composedConfs = RocksConfs :+
       ("spark.sql.streaming.join.stateFormatVersion" -> "3")
     def run(name: String, provider: String, confs: Seq[(String, String)])(
         measure: Int => Replay): EngineResult =
-      if (engineSubset.exists(!_.contains(name)))
-        EngineResult(name, provider, 0, Seq.empty, Seq.empty)
-      else try withConfs(spark, confs) {
+      try withConfs(spark, confs) {
         // warmup replays get the same off-clock provider unload as the
         // samples: the adaptive warmup reads consecutive-replay
         // agreement as "settled", and provider accumulation across
@@ -913,12 +843,10 @@ object Bench {
         // (this round's composed warmups hit the 5-replay cap twice
         // before the unload landed)
         def warmMeasure(): Long = {
-          if (!unloadOff) org.apache.spark.sql.graft.StateStoreBridge.unloadAll()
+          org.apache.spark.sql.graft.StateStoreBridge.unloadAll()
           measure(WarmupN).rate
         }
-        val warmups =
-          if (fixedWarmup) { warmMeasure(); 1 }
-          else warmUntilStable(() => warmMeasure())
+        val warmups = warmUntilStable(() => warmMeasure())
         val resolved = ResolvedConfKeys.map { k =>
           k -> (try spark.conf.get(k)
             catch { case scala.util.control.NonFatal(_) => "unset" })
@@ -933,12 +861,12 @@ object Bench {
           // gives maintenance nothing stale to do inside the measured
           // window; the interval itself stays at its default (the r14
           // deferral experiment is why it must).
-          if (!unloadOff) org.apache.spark.sql.graft.StateStoreBridge.unloadAll()
+          org.apache.spark.sql.graft.StateStoreBridge.unloadAll()
           // off-clock full collection: the warmup + prior samples churn
           // hundreds of MB of short-lived state, and a collection
           // landing MID-sample is indistinguishable from a regression
           // in a 2-second replay (r13's v2 min = 54% of median)
-          if (!gcOff) System.gc()
+          System.gc()
           measure(StreamN)
         }, resolved)
       } catch {
@@ -950,7 +878,7 @@ object Bench {
       run("v1", HdfsProvider, Nil)(n => replayRate(spark, n, v1Engine)),
       run("v1_rocksdb", RocksProvider, RocksConfs)(n =>
         replayRate(spark, n, v1Engine)),
-      run("v2", RocksProvider, v2Confs)(n => replayRate(spark, n, v2Engine)),
+      run("v2", RocksProvider, RocksConfs)(n => replayRate(spark, n, v2Engine)),
       // composed warms at FULL measurement size: its three-operator
       // state chain (dedup + join + agg stores) keeps settling past a
       // 30k-trade warmup — the r14 shakeout run still showed a 13.8k →
@@ -968,7 +896,7 @@ object Bench {
     * windowed agg, THREE stateful operators in one continuous query
     * (the StreamJoinsSpec pipeline, scaled up). Trades and quotes
     * replay together; the rate counts every input event across both
-    * streams. StreamBreakdown measured the interval join as HALF the
+    * streams. Per-stage replays measured the interval join as HALF the
     * composed budget on the default HDFS provider (join-only 35k ev/s
     * vs dedup 80k, agg 60k). */
   private val ComposedTradesN = 100000

@@ -297,7 +297,10 @@ object HashOps {
     // but 64-bit codes (e.g. xxhash64 shingles) would silently corrupt
     // the min selection via signed wraparound. Fail loudly instead:
     // one validation pass of np compares, negligible next to the w·np
-    // selection loop below.
+    // selection loop below. Positions share the packing: a position
+    // at or past posEnc would carry into the code bits.
+    require(np <= posEnc,
+      s"winnowSelect: $np spans would overflow the posEnc=$posEnc position field")
     val maxCode = (Long.MaxValue - np) / posEnc
     var v = 0
     while (v < np) {

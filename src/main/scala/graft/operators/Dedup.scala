@@ -2277,11 +2277,10 @@ object Dedup {
       .filter(col("jaccard") >= JaccardThreshold)
       .groupBy(col("batch_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("jaccard")).as("best_jaccard"))
-    // verdict universe: the batch's own shingleable mod-4 docs — the
-    // same rows winnowVerdict's (sets ∪ batch) filter selected when the
-    // index holds no batch-mod docs, without re-scanning the sets table
+    // verdict universe: every shingleable doc of the batch the caller
+    // passed — the drill narrows its batch to the mod-4 docs before the
+    // call, a streaming gate judges every arrival
     batchSh.filter(col("sz") > 0)
-      .filter(pmod(col("doc_id"), lit(IncrementalBatchMod)) === 0)
       .select(col("doc_id").as("batch_id"))
       .join(dups, Seq("batch_id"), "left")
       .select(col("batch_id"),

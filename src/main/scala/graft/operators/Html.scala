@@ -108,7 +108,7 @@ object Html {
     * regexp_replace: the entities are plain strings, and this chain
     * runs per BLOCK and per ANCHOR inside interpreted higher-order
     * lambdas, so seven regex-engine passes per call site were the
-    * extractor's hottest line (CrawlBreakdown r10). Identical output:
+    * extractor's hottest line (measured per stage in r10). Identical output:
     * the same substrings replaced in the same order. */
   private def decodeEntities(c: Column): Column =
     EntityMap.foldLeft(c) { case (acc, (e, v)) =>

@@ -114,6 +114,19 @@ class HashExpressionsSpec extends SparkSpec {
     }
   }
 
+  test("winnowSelect rejects more spans than the position field can encode") {
+    def spans(n: Int) = org.apache.spark.sql.catalyst.util.ArrayData
+      .toArrayData(Array.tabulate(n)(i => (i % 997).toLong))
+    // the last encodable position is posEnc - 1: posEnc spans fit
+    val keys = HashOps.winnowSelect(spans(8), 2, 8L).toLongArray()
+    assert(keys.forall(k => k / 8L == k % 8L), "keys must unpack to (code, pos)")
+    val posEnc = graft.operators.Dedup.WinnowPosEnc
+    val e = intercept[IllegalArgumentException] {
+      HashOps.winnowSelect(spans(posEnc.toInt + 1), 4, posEnc)
+    }
+    assert(e.getMessage.contains("position"))
+  }
+
   test("dot_product: SQL surface, zero-vector sign semantics") {
     Graft.registerFunctions(spark)
     val r = spark.sql(

@@ -114,6 +114,24 @@ class StreamingIngestGateSpec extends SparkSpec {
       "gate must emit exactly one verdict per arriving doc")
   }
 
+  test("winnow gate judges every shingleable arrival, not only the drill's mod-4 ids") {
+    val (postsT, setsT) = Dedup.ensureWinnowIndex(spark, sf0001,
+      corpusFilter = Dedup.drillCorpusFilter)
+    val batch = Tables.documents(spark, sf0001)
+      .filter(pmod(col("doc_id"), lit(Dedup.IncrementalBatchMod)) =!= 0)
+      .select(col("doc_id"), col("text"))
+    val shingleable = Dedup.shingledOn(batch).filter(col("sz") > 0)
+      .collect().map(_.getLong(0)).toSet
+    assert(shingleable.nonEmpty)
+    val verdicts = StreamingIngestGate.winnowVerdictFor(spark, batch, postsT, setsT)
+      .select("batch_id", "no_content").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(verdicts.size == batch.count(), "one verdict per arriving doc")
+    val unjudged = shingleable.count(verdicts)
+    assert(unjudged == 0,
+      s"$unjudged of ${shingleable.size} shingleable arrivals came out no_content")
+  }
+
   test("admitting gate: a duplicate of a just-kept doc is flagged across batches") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

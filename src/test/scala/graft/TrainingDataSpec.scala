@@ -934,6 +934,33 @@ class TrainingDataSpec extends SparkSpec {
       assert(nh == np, s"${r.getString(0)}: $np pairs but only $nh in baseline")
       assert(nh <= ne && r.getLong(4) == (if (ne > 0) nh * 1000 / ne else 0L))
     }
+    // the winnow leg verifies by membership in the PPJoin frame, so the
+    // counts above cannot see PPJoin drift: re-score in plain Scala
+    // from the shingle code sets, independently of every pair finder
+    val docs = Tables.documents(spark, sf0001).select(col("doc_id"), col("text"))
+    val codes = Dedup.shingledOn(docs).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    def jaccard(p: (Long, Long)): Double = {
+      val (a, b) = (codes(p._1), codes(p._2))
+      val common = a.count(b)
+      common.toDouble / (a.size + b.size - common)
+    }
+    val tau = Dedup.JaccardThreshold
+    val pairs = Dedup.jaccardPairs(spark, sf0001).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSet
+    assert(pairs.nonEmpty)
+    pairs.foreach(p => assert(jaccard(p) >= tau, s"pair $p scores ${jaccard(p)} < $tau"))
+    val hs = Dedup.winnowSelectedOn(docs).select(col("doc_id"), col("h")).distinct()
+    val cand = hs.as("a").join(hs.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id"), col("b.doc_id")).distinct().collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val missed = cand.filterNot(pairs).sorted.take(500)
+    assert(missed.nonEmpty, "no sub-threshold winnow candidates to check")
+    missed.foreach(p => assert(jaccard(p) < tau, s"candidate $p scores ${jaccard(p)} >= $tau"))
+    val winnowPairs = rows.find(_.getString(0) == "winnow_verified").get.getLong(1)
+    assert(winnowPairs == cand.count(jaccard(_) >= tau),
+      "winnow leg must equal the candidates whose re-scored jaccard clears tau")
   }
 
   test("winnow pairs find the planted near-dups and score set-jaccard exactly") {

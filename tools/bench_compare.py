@@ -127,8 +127,7 @@ def main(old_paths, new_path):
         so = od.get(e, {}).get("samples_rate", [])
         sn = nd.get(e, {}).get("samples_rate", [])
         delta = mn / mo - 1
-        # a missing sample band (wrapper artifact, engine skipped via
-        # SPARK_GRAFT_STREAM_ENGINES, or failed engine) is
+        # a missing sample band (wrapper artifact or failed engine) is
         # INDETERMINATE, not evidence of disjointness — a FINDING must
         # be backed by two real bands that do not overlap
         if not (so and sn):
